@@ -12,6 +12,8 @@ lineitem events documents embeddings.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -7763,6 +7765,23 @@ def q_text_langid_confusion(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # registry + oracles
 # ---------------------------------------------------------------------------
+
+# Files outside the repo that a query opens while its plan is built, so
+# tests can skip (not fail) such queries where the reference is absent.
+REFERENCE_INPUTS = {
+    "ingest_coda_real": ("/root/reference/resources/coda.imsc.yml.example",),
+    "ingest_real_files_e2e": (
+        "/root/reference/resources/small-coda.imsc.yml.example",
+        "/root/reference/resources/small-ymir.imsc.yml.example",
+    ),
+}
+
+
+def missing_inputs(name):
+    """The declared reference inputs of registry query ``name`` that do
+    not exist here (empty when all are present or none are declared)."""
+    return [p for p in REFERENCE_INPUTS.get(name, ()) if not os.path.exists(p)]
+
 
 QUERIES = {
     "s2_message_type_filter": q_s2_message_type_filter,

@@ -25,8 +25,8 @@ from scicat_ingestor_spark.sources import hdf5
 
 RESOURCE_DIR = "/root/reference/resources"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(RESOURCE_DIR), reason="reference resources not present"
+needs_resources = pytest.mark.skipif(
+    not os.path.isdir(RESOURCE_DIR), reason=f"{RESOURCE_DIR} not present"
 )
 
 
@@ -77,6 +77,7 @@ def _resolvers():
     }
 
 
+@needs_resources
 def test_every_shipped_schema_parses():
     files = _example_files()
     assert len(files) >= 6
@@ -86,7 +87,10 @@ def test_every_shipped_schema_parses():
         assert all(v.source in ("NXS", "SC", "VALUE") for v in s.variables)
 
 
-@pytest.mark.parametrize("path", _example_files(), ids=os.path.basename)
+@needs_resources
+@pytest.mark.parametrize(
+    "path", _example_files(), ids=[os.path.basename(p) for p in _example_files()]
+)
 def test_every_shipped_schema_compiles_and_runs(spark, path):
     schema = _load(path)
     transform = compile_schema(
@@ -101,6 +105,7 @@ def test_every_shipped_schema_compiles_and_runs(spark, path):
     assert "scientificMetadata" in out.columns and "_failures" in out.columns
 
 
+@needs_resources
 def test_coda_values_resolve_against_fixture(spark):
     schema = _load(f"{RESOURCE_DIR}/coda.imsc.yml.example")
     out = compile_schema(
@@ -126,6 +131,7 @@ def test_coda_values_resolve_against_fixture(spark):
     assert "start_time" in r["_failures"] and "end_time" in r["_failures"]
 
 
+@needs_resources
 def test_small_ymir_whole_object_getitem_chain(spark):
     """field:'' -> dict variable -> getitem projections
     (resources/small-ymir.imsc.yml.example:40-70)."""
