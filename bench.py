@@ -14,6 +14,10 @@ warm-up pass of the parquet footer reads.
 measurement tools, excluded from the default loops so the per-round
 signal concentrates on pipeline shapes); they land in a separate
 "diagnostics" map in bench_out.json, never in the headline total.
+
+Queries whose declared reference inputs (`queries.missing_inputs`) are
+absent are not run; bench_out.json lists them with the reason under
+"skipped", and they are left out of the compact line's "queries".
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scicat_ingestor_spark.queries import QUERIES  # noqa: E402
+from scicat_ingestor_spark.queries import QUERIES, missing_inputs  # noqa: E402
 from scicat_ingestor_spark.session import get_session  # noqa: E402
 
 # Headline set: the flagship pipeline, the TPC-H-shaped analytics pair,
@@ -156,9 +160,18 @@ def main() -> None:
         finally:
             shutil.rmtree(base, ignore_errors=True)
 
+    # queries whose declared reference inputs are absent here skip
+    # visibly: recorded with the reason under "skipped", never timed
+    skipped = {
+        n: f"missing inputs: {', '.join(m)}"
+        for n in QUERIES
+        if (m := missing_inputs(n))
+    }
+    headline = [n for n in HEADLINE if n not in skipped]
+
     # warm-up pass: JVM codegen, Python worker pools, parquet footers —
     # steady-state throughput is what a long-lived cluster job sees
-    for name in HEADLINE:
+    for name in headline:
         run(name)
 
     # MEDIAN of three timed runs per query (r9 — VERDICT r8 #1: the
@@ -182,7 +195,7 @@ def main() -> None:
         execs[name] = round(e, 4)
         samples[name] = [round(r[0], 4) for r in runs]
 
-    for name in HEADLINE:
+    for name in headline:
         record(name, 3)
     run_stream()  # warm the streaming machinery once
     timings["stream_ingest_replay"] = round(min(run_stream() for _ in range(2)), 4)
@@ -195,7 +208,9 @@ def main() -> None:
     # Diagnostics run only when asked — their cost is measurement, not
     # pipeline, and it buried the rest-loop signal (VERDICT r6 task 7).
     with_diag = "--diagnostics" in sys.argv
-    skip = set(HEADLINE) | (set() if with_diag else set(DIAGNOSTICS))
+    skip = set(HEADLINE) | set(skipped)
+    if not with_diag:
+        skip |= set(DIAGNOSTICS)
     rest = [n for n in QUERIES if n not in skip]
     for name in rest:
         run(name)
@@ -222,6 +237,7 @@ def main() -> None:
             "samples": samples,
             "loadavg": loadavg,
             **({"diagnostics": diagnostics} if diagnostics else {}),
+            "skipped": skipped,
             "sf": sf_val,
         },
         separators=(",", ":"),
@@ -234,7 +250,7 @@ def main() -> None:
     # final line must be well under that: headline queries only (~1100
     # chars), with a pointer at the durable full artifact. The full map
     # is printed on an EARLIER line for human eyes.
-    headline_names = HEADLINE + ["stream_ingest_replay"]
+    headline_names = headline + ["stream_ingest_replay"]
     compact = json.dumps(
         {
             "metric": "headline_suite_total",

@@ -25,23 +25,26 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from scicat_ingestor_spark.operators.util import ensure_parallelism
+from scicat_ingestor_spark.operators.util import (
+    ensure_parallelism,
+    hot_key_census,
+    split_hot_keys,
+    triangle_join,
+)
 
 # Block-member threshold above which ngram_jaccard_pairs' exact join
-# routes a block through the triangle chunk-split (r12). Mirrors the
+# routes a block through the triangle split (r12). Mirrors the
 # r8-calibrated similarity.CELL_SPLIT_THRESHOLD (20k members for dim-64
 # cosine cells: split wins >3x at 20k, washes at 8k, loses at 4k);
 # a 1-gram shingle array_intersect costs about the same per pair as a
 # dim-64 cosine, and below ~10k members the plain join's broadcast-side
-# parallelism beats the k-fold replication outright (measured,
+# parallelism beats the g-fold replication outright (measured,
 # tools/ab_ngram.py: plain 5.5 s vs split 8.4 s on the 2k-member 'en'
 # block at sf0.1/32 cores — VERDICT r11 #1). Data-derived via the block
 # census, deliberately cluster-size-independent: what a single
 # sort-merge task can chew through does not change when executors are
-# added. _MAX_CHUNKS caps the replication factor (k = ceil(m/threshold)
-# needs k > 64 only past max_block-guard territory).
+# added.
 _SPLIT_MEMBERS = 10_000
-_MAX_CHUNKS = 64
 
 
 def content_hash(text: Column) -> Column:
@@ -245,7 +248,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     rows_per_band: int = 2,
     star: bool = False,
-    star_strategy: str = "window",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -265,51 +267,24 @@ def minhash_lsh_pairs(
     O(n) edges per bucket instead of O(n^2), with identical connected
     components (a clique and its star have the same reachability). This
     is the scale path for feeding dedup_clusters: a mega-bucket of 100k
-    identical documents yields 1e5 edges, not 5e9.
-
-    star_strategy picks how the bucket minimum is computed:
-    "window" (default) — unbounded window min inside the single bucket
-    shuffle; "join" — partial-aggregated groupBy min + exchange-reused
-    shuffle join back, the AQE-skew-splittable fallback for buckets hot
-    enough that even linear single-task processing straggles. Both emit
-    identical rows.
+    identical documents yields 1e5 edges, not 5e9. The bucket minimum
+    is an unbounded window min inside the single bucket shuffle.
     """
-    if star_strategy not in ("window", "join"):
-        raise ValueError(
-            f"star_strategy must be 'window' or 'join', got {star_strategy!r}"
-        )
     buckets = lsh_band_buckets(df, text_col, id_col, shingle_n, bands, rows_per_band)
     if star:
-        if star_strategy == "window":
-            # ONE shuffle of the bucket stream: unbounded window min
-            # computes the bucket representative in the same exchange
-            # that co-locates the bucket — no second read of the
-            # signature pipeline, no join. A mega-bucket is a single
-            # window partition, but the work is linear and WindowExec
-            # spills its row buffer, so this is the default. (A/B at
-            # sf0.1: 2.65 s vs 4.05 s for the join form on
-            # dedup_clusters end-to-end.)
-            from pyspark.sql import Window as _W
+        # ONE shuffle of the bucket stream: unbounded window min
+        # computes the bucket representative in the same exchange
+        # that co-locates the bucket — no second read of the
+        # signature pipeline, no join. A mega-bucket is a single
+        # window partition, but the work is linear and WindowExec
+        # spills its row buffer. (A/B at sf0.1: 2.65 s vs 4.05 s for a
+        # groupBy-min + join-back form on dedup_clusters end-to-end;
+        # 29.8 s vs 47.6 s on the x100 replica, SCALE.md round 4.)
+        from pyspark.sql import Window as _W
 
-            w = _W.partitionBy("band", "sig")
-            return (
-                buckets.withColumn("_min_id", F.min(id_col).over(w))
-                .filter(F.col(id_col) > F.col("_min_id"))
-                .select(
-                    F.col("_min_id").alias("id_a"), F.col(id_col).alias("id_b")
-                )
-                .distinct()
-            )
-        # star_strategy="join": partial-aggregated groupBy min + join
-        # back. Pays a second exchange read + join, but the join is
-        # AQE-skew-splittable — prefer it when ONE bucket is so hot
-        # that even linear single-task window processing straggles.
-        # shuffle_hash pins exchange reuse (an AQE broadcast of mins
-        # would leave the buckets side unshuffled but recompute the
-        # signature fold for the mins aggregation).
-        mins = buckets.groupBy("band", "sig").agg(F.min(id_col).alias("_min_id"))
+        w = _W.partitionBy("band", "sig")
         return (
-            buckets.hint("shuffle_hash").join(mins, ["band", "sig"])
+            buckets.withColumn("_min_id", F.min(id_col).over(w))
             .filter(F.col(id_col) > F.col("_min_id"))
             .select(
                 F.col("_min_id").alias("id_a"), F.col(id_col).alias("id_b")
@@ -411,265 +386,41 @@ def simhash_hamming_pairs(
     bits: int = 16,
     bands: int = 4,
     max_hamming: int | None = None,
-    star: bool = False,
-    pair_split: int | None = None,
     split_threshold: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by banded SimHash — the Hamming-distance
     form the algorithm is actually for (exact-signature grouping misses
     a 1-bit difference, which is SimHash's whole point).
 
-    Pigeonhole: two signatures within Hamming distance ``bands - 1``
-    agree exactly on at least one of the ``bands`` bit-bands, so banding
-    has perfect recall up to that radius.
+    The text front end of :func:`banded_hamming_pairs`: the SimHash
+    signature fold is projected right above the parallelism
+    repartition, and the banded candidate/verify join (pigeonhole
+    recall up to ``bands - 1``, first-matching-band emission, no
+    pair-sized distinct) is the shared one.
 
-    Plan shape: candidate pairs come from a SELF-EQUI-JOIN on
-    (band, band_value). Near-dup corpora cluster — a boilerplate
-    template can put thousands of docs into ONE band bucket, and the
-    collect-members-then-expand-in-array-exprs alternative runs that
-    bucket's O(m^2) pair expansion in a single task (measured 150+ s at
-    sf0.1); the join formulation gives Catalyst/AQE a normal shuffle
-    join. Each pair is emitted ONLY in its first matching band (the
-    per-band values ride along, so "no earlier band matched" is a
-    codegen'd filter) — no dedup-across-bands ``distinct``, so pair
-    triples never shuffle again after the join.
-
-    ``pair_split=g`` additionally applies the triangle self-join split:
-    each row gets a deterministic group in [0, g) and is replicated to
-    the g unordered group-cells containing it; a pair meets in exactly
-    the cell (min(grp_a, grp_b), max(...)), enforced by the cell-match
-    filter, so a hot bucket's m^2/2 pair expansion spreads over
-    g(g+1)/2 tasks instead of ONE. Replication costs g x rows and ~4x
-    total probe work — pay it when buckets are known to be huge (the
-    dup-dense regime).
-
-    ``split_threshold=t`` is the auto form of that knob (the two-pass
-    refinement): a census pass counts bucket sizes (one partial-agg
-    shuffle whose output is bucket-count-sized, collected to the driver
-    — at most corpus/t keys by construction), then ONLY buckets with
-    more than t members take the triangle split, with the factor sized
-    FROM the census (g = ceil(max_bucket/t), capped at 64) so each
-    cell carries ~t rows — ``pair_split`` overrides g when given;
-    every other row keeps the plain single-shuffle join with zero
-    replication. With no hot bucket the returned plan is
-    EXACTLY the unsplit plan — the census adds no operator to the data
-    path (pinned by tests/test_plans.py).
-
-    Set ``t`` from the single-task envelope, NOT low "to be safe": the
-    measured A/B (SCALE.md r7; dup-dense x100 replica, max bucket 96k,
-    1.755e9 verified pairs) has the UNSPLIT join 4.3x faster — a
-    bucket's m^2/2 expansion is streamed by whole-stage codegen at
-    ~1e8 candidates/s/core, so the split's census pass (one extra
-    corpus read + signature fold) and g-times hot-row replication only
-    amortize once ONE task's emission would run for many minutes:
-    m^2/2 >~ 1e10, i.e. t ~ 200k members. The guard is insurance
-    against the pathological bucket (m in the millions -> single-task
-    days), not a default accelerator.
-
-    ``star=True`` links every bucket member to the bucket minimum
-    instead of emitting all pairs — linear output for mega-buckets,
-    same connected components.
+    ``split_threshold=t`` arms the hot-bucket triangle split (see
+    :func:`banded_hamming_pairs`). Set ``t`` from the single-task
+    envelope, NOT low "to be safe": the measured A/B (SCALE.md r7;
+    dup-dense x100 replica, max bucket 96k, 1.755e9 verified pairs) has
+    the UNSPLIT join 4.3x faster — a bucket's m^2/2 expansion is
+    streamed by whole-stage codegen at ~1e8 candidates/s/core, so the
+    split's census pass (one extra corpus read + signature fold) and
+    g-times hot-row replication only amortize once ONE task's emission
+    would run for many minutes: m^2/2 >~ 1e10, i.e. t ~ 200k members.
+    The guard is insurance against the pathological bucket (m in the
+    millions -> single-task days), not a default accelerator.
 
     Returns (id_a, id_b, hamming) with id_a < id_b and
     hamming <= max_hamming (default ``bands - 1``, the radius banding
     fully covers).
     """
-    if bits % bands:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    if star and (
-        (pair_split and pair_split > 1) or split_threshold is not None
-    ):
-        # pair_split spreads the all-PAIRS expansion; star mode never
-        # expands pairs (linear bucket-min edges), so the combination is
-        # a caller mistake — fail loudly instead of silently ignoring it
-        raise ValueError(
-            "pair_split/split_threshold apply to all-pairs mode only; "
-            "star=True emits linear bucket-min edges and has no pair "
-            "expansion to split"
-        )
-    if max_hamming is None:
-        max_hamming = bands - 1
-    width = bits // bands
     sig = ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
         simhash_signature(F.col(text_col), bits).alias("simhash"),
     )
-    half = (bits + 1) // 2
-    # per-band values as longs (one conv per band per ROW — plan-cheap)
-    # double as both the bucket key and the first-match-band witness.
-    # The coalesce makes the join key PROVABLY non-null: without it,
-    # the join's inferred isnotnull(bkey) pushes below the repartition
-    # with the whole signature fold substituted in, and the fold then
-    # runs a second time inside the single-split scan stage (measured
-    # 4.5 s of the query's 5.2 s at sf0.1); a non-nullable key folds
-    # that inferred filter to TRUE at plan time.
-    bvs = [
-        F.coalesce(
-            F.conv(F.substring("simhash", b * width + 1, width), 2, 10).cast(
-                "long"
-            ),
-            F.lit(-1),
-        ).alias(f"bv{b}")
-        for b in range(bands)
-    ]
-    sig = sig.select(
-        "id",
-        # non-nullable for the same reason as the band values: the
-        # hamming <= r filter otherwise infers isnotnull(h1/h2) and
-        # pushes the whole fold into the scan stage
-        F.coalesce(
-            F.conv(F.substring("simhash", 1, half), 2, 10).cast("long"), F.lit(0)
-        ).alias("h1"),
-        F.coalesce(
-            F.conv(F.substring("simhash", half + 1, bits - half), 2, 10).cast(
-                "long"
-            ),
-            F.lit(0),
-        ).alias("h2"),
-        *bvs,
+    return banded_hamming_pairs(
+        sig, "id", "simhash", bits, bands, max_hamming, split_threshold
     )
-    bv_names = [f"bv{b}" for b in range(bands)]
-    band_cols = [
-        F.struct(F.lit(b).alias("band"), F.col(f"bv{b}").alias("bkey"))
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        "id", "h1", "h2", *bv_names, F.explode(F.array(*band_cols)).alias("bk")
-    ).select(
-        "id", "h1", "h2", *bv_names,
-        F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"),
-    )
-    ham_of = lambda ah1, ah2, bh1, bh2: (  # noqa: E731
-        F.bit_count(ah1.bitwiseXOR(bh1)) + F.bit_count(ah2.bitwiseXOR(bh2))
-    ).cast("long")
-    if star:
-        # bucket minimum via partial-aggregatable groupBy, then one
-        # join back: every member links to its bucket's min id. Mins
-        # can differ per band, so cross-band dedup still needs the
-        # final distinct here (unlike the all-pairs path below).
-        mins = banded.groupBy("band", "bkey").agg(
-            F.min(F.struct("id", "h1", "h2")).alias("m")
-        )
-        joined = banded.join(mins, ["band", "bkey"]).filter(
-            F.col("id") > F.col("m.id")
-        )
-        return (
-            joined.select(
-                F.col("m.id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                ham_of(
-                    F.col("m.h1"), F.col("m.h2"), F.col("h1"), F.col("h2")
-                ).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct()
-        )
-    # shuffle_hash pins a shuffle join: both sides are the SAME subplan,
-    # so the exchange is materialized ONCE and both inputs read that
-    # shuffle (an AQE broadcast would recompute the signature fold for
-    # the second side). Dup-dense corpora make the candidate-pair set
-    # huge (0.5M pairs from 5k docs at sf0.1), so the old
-    # emit-per-band + distinct shape paid a pair-sized shuffle just to
-    # drop cross-band duplicates; instead emit each pair ONLY in its
-    # first matching band — the carried per-band values make "no
-    # earlier band matched" a codegen'd filter — and skip the distinct
-    # entirely (measured 6.0 s -> 2.3 s at sf0.1).
-    def all_pairs(bnd: DataFrame, g: int | None) -> DataFrame:
-        if g and g > 1:
-            grp = F.pmod(F.xxhash64(F.col("id")), F.lit(g)).cast("int")
-            cells = F.filter(
-                F.array(
-                    *[
-                        F.struct(F.lit(i).alias("ci"), F.lit(j).alias("cj"))
-                        for i in range(g)
-                        for j in range(i, g)
-                    ]
-                ),
-                lambda c: (c["ci"] == grp) | (c["cj"] == grp),
-            )
-            bnd = (
-                bnd.withColumn("grp", grp)
-                .withColumn("cell", F.explode(cells))
-                .select(
-                    "*", F.col("cell.ci").alias("ci"), F.col("cell.cj").alias("cj")
-                )
-                .drop("cell")
-            )
-        a, b = bnd.alias("a"), bnd.alias("b")
-        first_match = F.lit(True)
-        for j in range(bands - 1):
-            first_match = first_match & (
-                (F.col("a.band") <= j)
-                | (F.col(f"a.bv{j}") != F.col(f"b.bv{j}"))
-            )
-        join_key = (
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id"))
-        )
-        if g and g > 1:
-            # exactly-once: the pair's canonical cell is (min grp, max grp)
-            join_key = (
-                join_key
-                & (F.col("a.ci") == F.col("b.ci"))
-                & (F.col("a.cj") == F.col("b.cj"))
-                & (F.least(F.col("a.grp"), F.col("b.grp")) == F.col("a.ci"))
-                & (F.greatest(F.col("a.grp"), F.col("b.grp")) == F.col("a.cj"))
-            )
-        joined = a.join(b.hint("shuffle_hash"), join_key).filter(first_match)
-        return joined.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham_of(
-                F.col("a.h1"), F.col("a.h2"), F.col("b.h1"), F.col("b.h2")
-            ).alias("hamming"),
-        ).filter(F.col("hamming") <= max_hamming)
-
-    if split_threshold is not None:
-        # two-pass auto-split: census the bucket sizes, split only the
-        # hot ones. Splitting hot/cold keeps exactly-once intact: a
-        # pair's FIRST matching band bucket lives in exactly one of the
-        # two subsets, and the first-match filter reads the carried
-        # band VALUES (bv0..), not bucket membership, so the other
-        # subset's join rejects the pair at any later matching band.
-        hot_rows = (
-            banded.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > split_threshold)
-            .select("band", "bkey", "n")
-            .collect()
-        )
-        if not hot_rows:
-            return all_pairs(banded, None)
-        if pair_split and pair_split > 1:
-            g = pair_split
-        else:
-            # size g from the census so each triangle cell carries
-            # ~split_threshold rows: cell work is (m/g)^2/2, so a fixed
-            # g leaves (m/g)^2 ~ m^2/64 in ONE task for a mega-bucket —
-            # measured as a multi-minute straggler on the x100 replica.
-            # Cap at 64 (2080 cells) to bound the replication factor
-            # and the plan-literal size.
-            max_hot = max(r["n"] for r in hot_rows)
-            g = min(64, max(2, -(-max_hot // split_threshold)))
-        # TYPED hot/cold routing (r8): broadcast semi/anti joins against
-        # the (tiny, census-bounded) hot-key relation — the previous
-        # string-concat isin relied on Spark's long->string cast
-        # matching Python int formatting, and a dup-dense census with
-        # many hot buckets inflated the plan literal. A broadcast hash
-        # join adds no shuffle and scales with the census, not the plan.
-        hot_df = F.broadcast(
-            df.sparkSession.createDataFrame(
-                [(int(r["band"]), int(r["bkey"])) for r in hot_rows],
-                "band int, bkey long",
-            )
-        )
-        return all_pairs(
-            banded.join(hot_df, ["band", "bkey"], "left_anti"), None
-        ).unionByName(
-            all_pairs(banded.join(hot_df, ["band", "bkey"], "left_semi"), g)
-        )
-    return all_pairs(banded, pair_split)
 
 
 def simhash_dedup_groups(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
@@ -888,12 +639,12 @@ def prefix_filtered_jaccard_pairs(
         "_id", "_g", "_pos", "_sz"
     )
     # r12 NOTE: a shared_fanout seal under `pref` (both candidate-join
-    # sides consume it) MEASURED SLOWER (5.8 vs 5.3 s min-of-4,
-    # tools/ab_min.py): the sealed exchange's read side AQE-coalesces
-    # to a couple of tasks (pref is only a few MB) and the quadratic
-    # candidate join then runs at that reduced parallelism, costing
-    # more than the one duplicated window pass saves. Left unsealed
-    # deliberately.
+    # sides consume it) MEASURED SLOWER (5.8 vs 5.3 s min-of-4, an
+    # interleaved same-session A/B): the sealed exchange's read side
+    # AQE-coalesces to a couple of tasks (pref is only a few MB) and
+    # the quadratic candidate join then runs at that reduced
+    # parallelism, costing more than the one duplicated window pass
+    # saves. Left unsealed deliberately.
     # PPJoin prunes, both lossless at the threshold:
     # - length filter: J >= t forces t*|A| <= |B| and t*|B| <= |A|
     # - positional filter: all common shingles beyond the FIRST one (in
@@ -973,7 +724,9 @@ def ngram_jaccard_pairs(
     candidate volume, recall bounded by the LSH banding instead of
     exhaustive — the docstring's own 100 TB recommendation, made
     explicit). Blocks at or under the ceiling always take the exact
-    join, so small-block results are unchanged.
+    join, so small-block results are unchanged; the same census sends
+    blocks past ``_SPLIT_MEMBERS`` through the triangle split
+    (``util.split_hot_keys``): same pairs, more tasks.
 
     Returns (id_a, id_b, jaccard) for pairs >= threshold.
     """
@@ -985,7 +738,7 @@ def ngram_jaccard_pairs(
         word_shingles(F.col(text_col), shingle_n).alias("_sh"),
     )
 
-    def plain_pairs(p: DataFrame) -> DataFrame:
+    def pairs(a: DataFrame, b: DataFrame, g: int | None) -> DataFrame:
         # The default exact path (r12 — reverted to the pre-r11 shape
         # after measurement, VERDICT r11 #1): one equi-join on _blk.
         # The "one task per block" serialization the r11 chunk-split
@@ -998,63 +751,14 @@ def ngram_jaccard_pairs(
         # A/B at sf0.1/32 cores: plain 5.5 s vs 8.4-8.8 s for both
         # split variants (tools/ab_ngram.py) — the k-fold replication
         # of the shingle arrays and the wider sort keys cost more than
-        # the parallelism they bought.
-        a, b = p.alias("a"), p.alias("b")
+        # the parallelism they bought. Only census-flagged blocks past
+        # _SPLIT_MEMBERS take the triangle split (g > 1).
         sim = jaccard_similarity(F.col("a._sh"), F.col("b._sh"))
-        return (
-            a.join(
-                b,
-                (F.col("a._blk") == F.col("b._blk"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.round(sim, 6).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
+        cond = (F.col("a._blk") == F.col("b._blk")) & (
+            F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
         )
-
-    def chunked_pairs(p: DataFrame, k: int) -> DataFrame:
-        # Triangle chunk-split for census-flagged NEAR-CEILING blocks
-        # only (guide §2.5; the knn_join hot-cell precedent): chunk
-        # docs by a deterministic id hash into k buckets and key the
-        # join by the unordered chunk PAIR (u, v) — a doc in chunk c
-        # is replicated once per j in [0, k) under key
-        # (min(c, j), max(c, j)). Two docs with chunks (cx, cy),
-        # cx != cy, meet at exactly (min(cx, cy), max(cx, cy)); same-
-        # chunk docs meet at every key containing c, so the
-        # (a._c = b._c) => (u = v) conjunct keeps only their (c, c)
-        # meeting. Same pair set exactly once, k(k+1)/2 tasks per
-        # block instead of 1, at a k-fold replication of the shingle
-        # arrays — worth it ONLY where a single sort-merge task would
-        # otherwise own >> _SPLIT_MEMBERS²/2 pair evaluations (the r8
-        # hot-cell calibration; below that the plain path's broadcast
-        # parallelism wins, measured in tools/ab_ngram.py).
-        pc = p.withColumn(
-            "_c", F.pmod(F.xxhash64(F.col(id_col)), F.lit(k))
-        ).withColumn(
-            "_j",
-            F.explode(F.sequence(F.lit(0), F.lit(k - 1)).cast("array<long>")),
-        ).withColumn(
-            "_u", F.least("_c", "_j")
-        ).withColumn(
-            "_v", F.greatest("_c", "_j")
-        )
-        a, b = pc.alias("a"), pc.alias("b")
-        sim = jaccard_similarity(F.col("a._sh"), F.col("b._sh"))
         return (
-            a.join(
-                b,
-                (F.col("a._blk") == F.col("b._blk"))
-                & (F.col("a._u") == F.col("b._u"))
-                & (F.col("a._v") == F.col("b._v"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                & (
-                    (F.col("a._c") != F.col("b._c"))
-                    | (F.col("a._u") == F.col("a._v"))
-                ),
-            )
+            triangle_join(a, b, cond, id_col, g)
             .select(
                 F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"b.{id_col}").alias("id_b"),
@@ -1065,27 +769,19 @@ def ngram_jaccard_pairs(
 
     if max_block is None:
         # no census by contract (callers opted out of the guard —
-        # and of the split, which needs the census to size k)
-        return plain_pairs(prepped)
+        # and of the split, which needs the census to size g)
+        return pairs(prepped, prepped, None)
     # census: one partial-agg shuffle, output is block-count-sized; the
     # collected set is at most corpus/floor keys by construction.
     # Count on the RAW input, not `prepped` — block sizes don't need
     # the shingle fold, and running it in the census doubled the
     # query's exec cost (measured 4.2 s -> 6.8 s at sf0.1). ONE census
     # serves both the max_block guard and the split-block detection.
-    floor = min(max_block, _SPLIT_MEMBERS)
-    census = (
-        df.groupBy(F.col(block_col).alias("_blk"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > floor)
-        .collect()
+    census = hot_key_census(
+        df, [F.col(block_col).alias("_blk")], min(max_block, _SPLIT_MEMBERS)
     )
     hot = [r["_blk"] for r in census if r["n"] > max_block]
-    split = {
-        r["_blk"]: r["n"]
-        for r in census
-        if r["n"] <= max_block and r["n"] > _SPLIT_MEMBERS
-    }
+    split = [r for r in census if _SPLIT_MEMBERS < r["n"] <= max_block]
     if hot and oversize == "raise":
         raise ValueError(
             f"ngram_jaccard_pairs: {len(hot)} block(s) exceed "
@@ -1096,16 +792,7 @@ def ngram_jaccard_pairs(
         )
 
     def exact_side(p: DataFrame) -> DataFrame:
-        if not split:
-            return plain_pairs(p)
-        blks = list(split)
-        k = min(
-            _MAX_CHUNKS,
-            max(2, -(-max(split.values()) // _SPLIT_MEMBERS)),
-        )
-        return plain_pairs(p.filter(~F.col("_blk").isin(blks))).unionByName(
-            chunked_pairs(p.filter(F.col("_blk").isin(blks)), k)
-        )
+        return split_hot_keys(pairs, p, p, ["_blk"], split, _SPLIT_MEMBERS)
 
     if not hot:
         return exact_side(prepped)
@@ -1287,6 +974,8 @@ def hamming_signature_bands(
     longs the XOR+bit_count verify consumes; every key is coalesced
     non-null so no inferred isnotnull filter re-runs the upstream
     signature stage (the dedup_simhash lesson)."""
+    if bits % bands:
+        raise ValueError(f"bits={bits} not divisible by bands={bands}")
     width = bits // bands
     half = (bits + 1) // 2
     bvs = [
@@ -1339,44 +1028,71 @@ def banded_hamming_pairs(
     bits: int = 64,
     bands: int = 4,
     max_hamming: int | None = None,
+    split_threshold: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b, hamming) pairs whose precomputed bit-string
     signatures agree on >= 1 of ``bands`` equal-width bands and differ
-    in <= ``max_hamming`` bits — the dedup_simhash candidate/verify
-    machinery (r11) factored over an EXTERNAL signature column, so
+    in <= ``max_hamming`` bits — the candidate/verify machinery of
+    :func:`simhash_hamming_pairs` over an EXTERNAL signature column, so
     non-text signature planes (perceptual image hashes in
     operators/multimodal.py) reuse the identical join shape.
 
-    Pigeonhole: bands-band agreement gives FULL recall at hamming <=
-    bands - 1 (the default threshold). Scale shape is dedup_simhash's:
-    band values become long join keys (coalesced non-null so no
-    inferred isnotnull re-runs the upstream stage), each pair is
-    emitted ONLY in its first matching band (codegen'd filter — no
-    pair-sized distinct shuffle), and the verify is two XOR+bit_count
-    half-words."""
+    Pigeonhole: two signatures within Hamming distance ``bands - 1``
+    agree exactly on at least one band, so banding gives FULL recall at
+    the default threshold. Candidates come from a SELF-EQUI-JOIN on
+    (band, band_value): near-dup corpora cluster (a boilerplate
+    template can put thousands of docs into ONE bucket), and a
+    collect-members-then-expand-in-array-exprs form runs that bucket's
+    O(m^2) expansion in a single task (measured 150+ s at sf0.1) where
+    the join gives Catalyst/AQE a normal shuffle join. The verify is
+    two XOR+bit_count half-words.
+
+    ``split_threshold=t`` arms the census-driven hot-bucket split
+    (``util.split_hot_keys``): (band, bkey) buckets with more than t
+    members take the triangle split with g sized from the census, every
+    other row keeps the plain join. With no hot bucket the plan is
+    EXACTLY the unsplit plan (pinned by tests/test_plans.py).
+    Splitting hot/cold keeps exactly-once intact: a pair's FIRST
+    matching band bucket lives in exactly one of the two subsets, and
+    the first-match filter reads the carried band VALUES (bv0..), not
+    bucket membership, so the other subset's join rejects the pair at
+    any later matching band."""
     if max_hamming is None:
         max_hamming = bands - 1
     banded = hamming_signature_bands(sig, id_col, sig_col, bits, bands)
-    a, b = banded.alias("a"), banded.alias("b")
+    # Each pair is emitted ONLY in its first matching band: the carried
+    # per-band values make "no earlier band matched" a codegen'd filter,
+    # so no pair-sized distinct shuffle drops cross-band duplicates
+    # (measured 6.0 s -> 2.3 s at sf0.1; dup-dense corpora make the
+    # candidate set huge, 0.5M pairs from 5k docs).
     first_match = F.lit(True)
     for j in range(bands - 1):
         first_match = first_match & (
             (F.col("a.band") <= j)
             | (F.col(f"a.bv{j}") != F.col(f"b.bv{j}"))
         )
-    joined = a.join(
-        b.hint("shuffle_hash"),
+    cond = (
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bkey") == F.col("b.bkey"))
         & (F.col("a.id") < F.col("b.id"))
-        & first_match,
+        & first_match
     )
     ham = (
         F.bit_count(F.col("a.h1").bitwiseXOR(F.col("b.h1")))
         + F.bit_count(F.col("a.h2").bitwiseXOR(F.col("b.h2")))
     ).cast("long")
-    return joined.select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        ham.alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
+
+    def pairs(a: DataFrame, b: DataFrame, g: int | None) -> DataFrame:
+        # shuffle_hash pins a shuffle join: both sides are the SAME
+        # subplan, so the exchange is materialized ONCE and both inputs
+        # read it (an AQE broadcast would recompute the signature fold
+        # for the second side)
+        return triangle_join(a, b, cond, "id", g, hint="shuffle_hash").select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            ham.alias("hamming"),
+        ).filter(F.col("hamming") <= max_hamming)
+
+    keys = ["band", "bkey"]
+    hot = hot_key_census(banded, keys, split_threshold)
+    return split_hot_keys(pairs, banded, banded, keys, hot, split_threshold)

@@ -20,6 +20,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from scicat_ingestor_spark.operators.util import (
+    hot_key_census,
+    split_hot_keys,
+    triangle_join,
+)
+
 
 def lit_doubles(obj: list) -> Column:
     """Nested double-array plan constant via a constant-folded from_json.
@@ -110,6 +116,39 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
+def top_k_neighbors(
+    scored: DataFrame,
+    key: str,
+    neighbor: str,
+    k: int,
+    key_out: str | None = None,
+) -> DataFrame:
+    """The per-``key`` top-k cut every cosine ranking path ends in:
+    ``scored`` carries the unrounded ``_cos``; rank by cosine
+    descending with ``neighbor`` ascending as the tiebreak (both
+    engines order identically), keep ranks 1..k. Returns (key, or
+    ``key_out`` when given, neighbor_id, cosine rounded to 6, rank)."""
+    w = Window.partitionBy(key).orderBy(
+        F.col("_cos").desc(), F.col(neighbor).asc()
+    )
+    key_c = F.col(key) if key_out is None else F.col(key).alias(key_out)
+    nb_c = (
+        F.col(neighbor)
+        if neighbor == "neighbor_id"
+        else F.col(neighbor).alias("neighbor_id")
+    )
+    return (
+        scored.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .select(
+            key_c,
+            nb_c,
+            F.round(F.col("_cos"), 6).alias("cosine"),
+            F.col("_rk").alias("rank"),
+        )
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -132,19 +171,7 @@ def brute_force_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col("_qvec")).alias("_cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
+    return top_k_neighbors(scored, query_id_col, id_col, k)
 
 
 def cosine_pairs_lsh(
@@ -486,19 +513,7 @@ def ivf_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col("_qvec")).alias("_cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
+    return top_k_neighbors(scored, query_id_col, id_col, k)
 
 
 def lsh_topk(
@@ -525,19 +540,7 @@ def lsh_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col("_qvec")).alias("_cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
+    return top_k_neighbors(scored, query_id_col, id_col, k)
 
 
 def lsh_multi_topk(
@@ -592,75 +595,7 @@ def lsh_multi_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col("_qvec")).alias("_cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
-
-
-def _triangle_replicate(df: DataFrame, id_col: str, g: int) -> DataFrame:
-    """The triangle self-join split (dedup.simhash_pairs precedent):
-    each row gets a deterministic group in [0, g) and is replicated to
-    the g unordered group-cells containing it; a pair meets in exactly
-    the cell (min(grp_a, grp_b), max(...)) — enforced by the caller's
-    cell-match + canonical-cell join conditions — so a hot bucket's m^2
-    pair expansion spreads over g(g+1)/2 tasks instead of ONE."""
-    grp = F.pmod(F.xxhash64(F.col(id_col)), F.lit(g)).cast("int")
-    tri = F.filter(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("ci"), F.lit(j).alias("cj"))
-                for i in range(g)
-                for j in range(i, g)
-            ]
-        ),
-        lambda c: (c["ci"] == grp) | (c["cj"] == grp),
-    )
-    return (
-        df.withColumn("_grp", grp)
-        .withColumn("_tc", F.explode(tri))
-        .select(
-            "*", F.col("_tc.ci").alias("_ci"), F.col("_tc.cj").alias("_cj")
-        )
-        .drop("_tc")
-    )
-
-
-def _triangle_conditions() -> Column:
-    """Exactly-once condition for triangle-replicated sides ``a``/``b``:
-    same cell, and the cell is the pair's canonical (min, max) group
-    cell."""
-    return (
-        (F.col("a._ci") == F.col("b._ci"))
-        & (F.col("a._cj") == F.col("b._cj"))
-        & (F.least(F.col("a._grp"), F.col("b._grp")) == F.col("a._ci"))
-        & (F.greatest(F.col("a._grp"), F.col("b._grp")) == F.col("a._cj"))
-    )
-
-
-def _hot_cell_census(cv: DataFrame, threshold: int | None) -> list:
-    """Build-time cell-size census: (cell, n) rows above the threshold.
-    One partial-agg shuffle whose output is AT MOST ``cells`` rows —
-    trivially collectible (the IVF cell count is a plan constant, not a
-    data-dependent key space). ``None`` disables the census (and the
-    extra corpus read it costs at build time)."""
-    if threshold is None:
-        return []
-    return (
-        cv.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > threshold)
-        .collect()
-    )
+    return top_k_neighbors(scored, query_id_col, id_col, k)
 
 
 # Calibrated from the measured r8 A/B on skewed single-cell corpora
@@ -706,18 +641,20 @@ def knn_join(
     (its single cell).
 
     ``split_threshold`` arms the census-driven hot-cell auto-split
-    (r8): a build-time cell-size census (one partial-agg pass, at most
-    ``cells`` rows collected) routes members of cells above the
-    threshold through the triangle replication split — the SAME pair
-    set, spread over g(g+1)/2 tasks instead of one — while every other
-    row keeps the plain single-shuffle join. With no hot cell the
-    returned plan is EXACTLY the unsplit plan (the census adds no
-    operator to the data path; pinned in tests/test_plans.py). This is
-    SEMANTIC-PRESERVING, unlike raising ``cells``: results — and the
-    SQL oracle — are unchanged, only task granularity moves. The
-    threshold default is the r7-calibrated single-task envelope
-    (~200k members); callers who instead want better recall at scale
-    still raise ``cells``/``nprobe``, which the recall report measures.
+    (r8), the shared ``util.split_hot_keys`` routing every quadratic
+    self-join here and in operators/dedup.py uses: a build-time
+    cell-size census (one partial-agg pass, at most ``cells`` rows
+    collected) sends the members of cells above the threshold through
+    the triangle split (``util.triangle_join``), the SAME pair set
+    spread over g(g+1)/2 tasks instead of one, while every other row
+    keeps the plain single-shuffle join. With no hot cell the returned
+    plan is EXACTLY the unsplit plan (pinned in tests/test_plans.py).
+    This is SEMANTIC-PRESERVING, unlike raising ``cells``: results,
+    and the SQL oracle, are unchanged, only task granularity moves.
+    The default is :data:`CELL_SPLIT_THRESHOLD` (the r8-calibrated
+    single-task envelope for dim-64 cosine candidates); callers who
+    instead want better recall at scale still raise
+    ``cells``/``nprobe``, which the recall report measures.
 
     Returns (id, neighbor_id, cosine, rank) with rank 1..k per id;
     vectors alone in their probed cells return no rows (both engines
@@ -744,10 +681,6 @@ def knn_join(
         probe_name = "cell"
 
     def pairs(a_side: DataFrame, b_side: DataFrame, g: int | None) -> DataFrame:
-        if g and g > 1:
-            a_side = _triangle_replicate(a_side, id_col, g)
-            b_side = _triangle_replicate(b_side, id_col, g)
-        a, b = a_side.alias("a"), b_side.alias("b")
         _nn = F.col("a._nrm") * F.col("b._nrm")
         cos = dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")) / F.when(
             _nn != 0, _nn
@@ -755,46 +688,18 @@ def knn_join(
         cond = (F.col(f"a.{probe_name}") == F.col("b.cell")) & (
             F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
         )
-        if g and g > 1:
-            cond = cond & _triangle_conditions()
-        return a.join(b, cond).select(
+        return triangle_join(a_side, b_side, cond, id_col, g).select(
             F.col(f"a.{id_col}").alias(id_col),
             F.col(f"b.{id_col}").alias("neighbor_id"),
             cos.alias("_cos"),  # evaluated ONCE: the window and the
             # output column both read this projection
         )
 
-    hot = _hot_cell_census(cv, split_threshold)
-    if not hot:
-        scored = pairs(a_all, cv, None)
-    else:
-        hot_ids = [int(r["cell"]) for r in hot]
-        g = min(64, max(2, -(-max(r["n"] for r in hot) // split_threshold)))
-        probe_col, cell_col = F.col(probe_name), F.col("cell")
-        scored = pairs(
-            a_all.filter(~probe_col.isin(hot_ids)),
-            cv.filter(~cell_col.isin(hot_ids)),
-            None,
-        ).unionByName(
-            pairs(
-                a_all.filter(probe_col.isin(hot_ids)),
-                cv.filter(cell_col.isin(hot_ids)),
-                g,
-            )
-        )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
+    hot = hot_key_census(cv, ["cell"], split_threshold)
+    scored = split_hot_keys(
+        pairs, a_all, cv, ["cell"], hot, split_threshold, a_keys=[probe_name]
     )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            id_col,
-            "neighbor_id",
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
+    return top_k_neighbors(scored, id_col, "neighbor_id", k)
 
 
 def knn_density(
@@ -954,19 +859,7 @@ def knn_join_exact(
             cosine(F.col(vec_col), F.col("_qvec")).alias("_cos"),
         )
     )
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            F.col("_qid").alias(id_col),
-            "neighbor_id",
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
+    return top_k_neighbors(scored, "_qid", "neighbor_id", k, key_out=id_col)
 
 
 def semantic_dedup_survivors(
@@ -1017,10 +910,7 @@ def semantic_dedup_survivors(
         norm(F.col(vec_col)).alias("_nrm"),
     )
 
-    def losers(side: DataFrame, g: int | None) -> DataFrame:
-        if g and g > 1:
-            side = _triangle_replicate(side, id_col, g)
-        a, b = side.alias("a"), side.alias("b")
+    def losers(a_side: DataFrame, b_side: DataFrame, g: int | None) -> DataFrame:
         _nn = F.col("a._nrm") * F.col("b._nrm")
         cos = F.round(
             dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
@@ -1030,25 +920,16 @@ def semantic_dedup_survivors(
         cond = (F.col("a.cell") == F.col("b.cell")) & (
             F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
         )
-        if g and g > 1:
-            cond = cond & _triangle_conditions()
         return (
-            a.join(b, cond)
+            triangle_join(a_side, b_side, cond, id_col, g)
             .filter(cos >= threshold)
             .select(F.col(f"b.{id_col}").alias(id_col))
         )
 
-    hot = _hot_cell_census(cv, split_threshold)
-    if not hot:
-        dup_ids = losers(cv, None).distinct()
-    else:
-        hot_ids = [int(r["cell"]) for r in hot]
-        g = min(64, max(2, -(-max(r["n"] for r in hot) // split_threshold)))
-        dup_ids = (
-            losers(cv.filter(~F.col("cell").isin(hot_ids)), None)
-            .unionByName(losers(cv.filter(F.col("cell").isin(hot_ids)), g))
-            .distinct()
-        )
+    hot = hot_key_census(cv, ["cell"], split_threshold)
+    dup_ids = split_hot_keys(
+        losers, cv, cv, ["cell"], hot, split_threshold
+    ).distinct()
     return cv.join(dup_ids, id_col, "left_anti").select(id_col, "cell")
 
 

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 # session -> {analyzed-plan semantic hash: probed scan split count}.
@@ -106,20 +109,13 @@ def shared_fanout(
     uses (guide §2.3 "project before the exchange"). The caller owns
     the union: a column missing from ``keep`` that a branch later
     reads fails analysis loudly (never silently re-widens the
-    exchange). Key columns are always retained.
-
-    ``SIS_DISABLE_FANOUT=1`` turns every call into a no-op — the A/B
-    switch the r11 optimization measurements flip per run so variant
-    and co-tenant noise decorrelate (tools/ab_wobble.py discipline).
+    exchange). Key columns are always retained. Measured (r12): the
+    narrowing is time-flat at sf0.1 in an interleaved A/B against the
+    unnarrowed seal; what it buys is shuffle width at scale
+    (warc_robots_filter's sealed exchange carries 6 columns, not 12).
     """
-    import os
-
-    # SIS_DISABLE_KEEP=1: A/B switch for the keep-narrowing alone
-    # (same single-session interleaving discipline as ab_min.py)
-    if keep is not None and os.environ.get("SIS_DISABLE_KEEP") != "1":
+    if keep is not None:
         df = df.select(*dict.fromkeys([*cols, *keep]))
-    if os.environ.get("SIS_DISABLE_FANOUT") == "1":
-        return df
     # A tautological filter SEALS the exchange against the two optimizer
     # moves that break subtree identity between consuming branches:
     #
@@ -191,6 +187,138 @@ def gate(df: DataFrame, cond) -> DataFrame:
     pushing the deterministic half anyway."""
     return df.filter(
         F.when(cond, F.spark_partition_id() >= 0).otherwise(F.lit(False))
+    )
+
+
+# Cap on the triangle split's group count g: g(g+1)/2 = 2080 cells
+# bounds both the per-row replication factor and the size of the
+# cell-array plan literal.
+MAX_SPLIT_GROUPS = 64
+
+
+def hot_key_census(df: DataFrame, keys: list, threshold: int | None) -> list:
+    """Build-time key-size census for a quadratic self-join: the
+    ``(*keys, n)`` rows of every key with more than ``threshold``
+    members. One partial-agg shuffle whose output is key-count-sized;
+    the collected set is at most rows/threshold keys by construction.
+    ``None`` disables the census (and the extra input read it costs at
+    build time)."""
+    if threshold is None:
+        return []
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > threshold)
+        .collect()
+    )
+
+
+def triangle_join(
+    a: DataFrame,
+    b: DataFrame,
+    cond: Column,
+    id_col: str,
+    g: int | None = None,
+    hint: str | None = None,
+) -> DataFrame:
+    """``a.alias("a")`` joined to ``b.alias("b")`` on ``cond`` (which
+    reads the ``a.``/``b.`` qualified columns), optionally spread by
+    the triangle self-join split.
+
+    With ``g > 1`` each row gets a deterministic group
+    ``xxhash64(id) mod g`` and is replicated to the g unordered
+    group-cells (i <= j) containing it. A pair meets in exactly its
+    canonical cell (min(grp_a, grp_b), max(...)), which the added
+    same-cell + canonical-cell conjuncts enforce, so one hot key's m^2
+    pair expansion spreads over g(g+1)/2 tasks instead of ONE, the same
+    pair set exactly once, at a g-fold row replication. ``hint`` is a
+    join-strategy hint on the ``b`` side."""
+    if g and g > 1:
+        a = _triangle_replicate(a, id_col, g)
+        b = _triangle_replicate(b, id_col, g)
+        cond = cond & (
+            (F.col("a._ci") == F.col("b._ci"))
+            & (F.col("a._cj") == F.col("b._cj"))
+            & (F.least(F.col("a._grp"), F.col("b._grp")) == F.col("a._ci"))
+            & (F.greatest(F.col("a._grp"), F.col("b._grp")) == F.col("a._cj"))
+        )
+    b = b.alias("b")
+    if hint is not None:
+        b = b.hint(hint)
+    return a.alias("a").join(b, cond)
+
+
+def _triangle_replicate(df: DataFrame, id_col: str, g: int) -> DataFrame:
+    grp = F.pmod(F.xxhash64(F.col(id_col)), F.lit(g)).cast("int")
+    tri = F.filter(
+        F.array(
+            *[
+                F.struct(F.lit(i).alias("ci"), F.lit(j).alias("cj"))
+                for i in range(g)
+                for j in range(i, g)
+            ]
+        ),
+        lambda c: (c["ci"] == grp) | (c["cj"] == grp),
+    )
+    return (
+        df.withColumn("_grp", grp)
+        .withColumn("_tc", F.explode(tri))
+        .select(
+            "*", F.col("_tc.ci").alias("_ci"), F.col("_tc.cj").alias("_cj")
+        )
+        .drop("_tc")
+    )
+
+
+def split_hot_keys(
+    pairs: Callable[[DataFrame, DataFrame, int | None], DataFrame],
+    a: DataFrame,
+    b: DataFrame,
+    keys: list[str],
+    hot: list,
+    threshold: int,
+    a_keys: list[str] | None = None,
+) -> DataFrame:
+    """Hot/cold routing for a keyed quadratic self-join.
+
+    ``pairs(a_side, b_side, g)`` builds the join (through
+    :func:`triangle_join`); pairs only form between rows of equal key
+    (``b``'s ``keys``, matched by ``a``'s ``a_keys``, default the same
+    names). ``hot`` is the :func:`hot_key_census` output. With no hot
+    key this returns ``pairs(a, b, None)``: EXACTLY the unsplit plan,
+    the census adds no operator to the data path. Otherwise the cold
+    rows keep the plain join and the hot rows take the triangle split,
+    with g sized from the census so each cell carries ~``threshold``
+    rows: cell work is (m/g)^2/2, and a fixed g leaves (m/g)^2 in ONE
+    task for a mega-key (measured as a multi-minute straggler on the
+    x100 replica), capped at :data:`MAX_SPLIT_GROUPS`.
+
+    Routing is a broadcast left_semi/left_anti join against the hot-key
+    relation: typed (an ``isin`` of string-concatenated composite keys
+    relied on cast formatting), sized by the census rather than the
+    plan literal, and it adds no shuffle."""
+    if not hot:
+        return pairs(a, b, None)
+    g = min(
+        MAX_SPLIT_GROUPS, max(2, -(-max(r["n"] for r in hot) // threshold))
+    )
+    hot_df = b.sparkSession.createDataFrame(
+        [tuple(r[k] for k in keys) for r in hot],
+        T.StructType([b.schema[k] for k in keys]),
+    )
+    hot_b = F.broadcast(hot_df)
+    hot_a = hot_b if a_keys is None else F.broadcast(hot_df.toDF(*a_keys))
+    a_keys = a_keys or keys
+    return pairs(
+        a.join(hot_a, a_keys, "left_anti"),
+        b.join(hot_b, keys, "left_anti"),
+        None,
+    ).unionByName(
+        pairs(
+            a.join(hot_a, a_keys, "left_semi"),
+            b.join(hot_b, keys, "left_semi"),
+            g,
+        )
     )
 
 

@@ -132,7 +132,6 @@ def knn_batch(
     the batch operator's census territory; the stream keeps increments
     small by construction."""
     from pyspark.errors import AnalysisException
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     spark = batch.sparkSession
@@ -181,19 +180,7 @@ def knn_batch(
         F.col(f"b.{id_col}").alias("neighbor_id"),
         cos.alias("_cos"),
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    neighbors = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            id_col,
-            "neighbor_id",
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
+    neighbors = similarity.top_k_neighbors(scored, id_col, "neighbor_id", k)
     # neighbors FIRST: they are computed against the pre-append index,
     # and a crash between the two appends must leave a state a replay
     # repairs (both sinks are keyed anti-join appends on the same ids)

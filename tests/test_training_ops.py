@@ -192,10 +192,10 @@ def test_lsh_megabucket_star_keeps_edges_linear(spark):
 
 def test_simhash_auto_split_exactly_once(spark):
     """split_threshold auto mode must emit the exact same pair set as
-    the unsplit and manual-split forms — hot buckets take the triangle
-    split, cold buckets the plain join, and a pair whose first matching
-    band is hot while a later band is cold (or vice versa) must still
-    appear exactly once."""
+    the unsplit form — hot buckets take the triangle split (g sized by
+    the census), cold buckets the plain join, and a pair whose first
+    matching band is hot while a later band is cold (or vice versa)
+    must still appear exactly once."""
     from scicat_ingestor_spark.operators.dedup import simhash_hamming_pairs
 
     # one mega duplicate class (hot bucket in every band) + organic docs
@@ -210,26 +210,16 @@ def test_simhash_auto_split_exactly_once(spark):
         docs, "text", "doc_id", **kw).collect()))
     assert base, "fixture regression: no near-dup pairs"
     # threshold low enough that the dupe-class buckets are hot
-    auto = sorted(map(tuple, simhash_hamming_pairs(
-        docs, "text", "doc_id", split_threshold=10, pair_split=3, **kw
-    ).collect()))
+    auto_df = simhash_hamming_pairs(
+        docs, "text", "doc_id", split_threshold=10, **kw
+    )
+    assert "_ci#" in auto_df._jdf.queryExecution().optimizedPlan().toString()
+    auto = sorted(map(tuple, auto_df.collect()))
     assert auto == base
     # threshold above every bucket: no split, still identical
     cold = sorted(map(tuple, simhash_hamming_pairs(
         docs, "text", "doc_id", split_threshold=10**9, **kw).collect()))
     assert cold == base
-
-
-def test_simhash_auto_split_rejects_star(spark):
-    import pytest
-
-    from scicat_ingestor_spark.operators.dedup import simhash_hamming_pairs
-
-    docs = spark.createDataFrame([("a", "x y z")], "doc_id string, text string")
-    with pytest.raises(ValueError):
-        simhash_hamming_pairs(
-            docs, "text", "doc_id", star=True, split_threshold=5
-        )
 
 
 def test_ngram_jaccard_block_guard_raises_on_mega_block(spark):
@@ -397,18 +387,6 @@ def test_vocab_sketch_within_rsd_of_exact(spark, sf_dir):
         # HLL tail luck. The exact count rides in the same result.
         v, est = r["vocab_exact"], r["vocab_hll"]
         assert abs(est - v) <= max(2, 0.05 * v), (r["source"], est, v)
-
-
-def test_lsh_star_strategy_validation(spark):
-    """Unrecognized star_strategy values raise instead of silently
-    falling through to the join path (ADVICE r3)."""
-    import pytest as _pytest
-
-    from scicat_ingestor_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = spark.createDataFrame([("d1", "a b c")], "doc_id string, text string")
-    with _pytest.raises(ValueError, match="star_strategy"):
-        minhash_lsh_pairs(docs, "text", "doc_id", star=True, star_strategy="windw")
 
 
 def test_incremental_dedup_admits_only_collision_free(spark, sf_dir):

@@ -8,7 +8,7 @@ Variants, all building the SAME pair set (tests pin equivalence):
   r12     — per-block k from the block census (operators.dedup current)
 
 min-of-N per variant, variants alternated within one session so load
-bursts decorrelate from the variant (tools/ab_min.py discipline).
+bursts decorrelate from the variant.
 
 Usage: AB_N=5 python tools/ab_ngram.py [raise|route]
 """

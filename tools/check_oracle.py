@@ -164,6 +164,7 @@ def main():
     import duckdb
 
     import __spark_entry__ as entrymod
+    from scicat_ingestor_spark.queries import missing_inputs
     from scicat_ingestor_spark.session import get_session
 
     spark = get_session("check_oracle")
@@ -185,6 +186,10 @@ def main():
     failures = []
     for name, fn in queries.items():
         if only and name not in only:
+            continue
+        missing = missing_inputs(name)
+        if missing:
+            print(f"SKIP {name}: missing inputs: {', '.join(missing)}")
             continue
         try:
             sdf = fn(spark, sf_dir)
