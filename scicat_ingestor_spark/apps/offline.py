@@ -37,21 +37,22 @@ def ingest_files(
     existing_pids: DataFrame | None = None,
     snapshots: dict | None = None,
 ) -> DataFrame:
-    """The offline pipeline as a pure batch transform.
+    """The offline pipeline as one batch plan for all schemas.
 
-    scan -> first-match schema selection -> (dimension snapshot joins
-    for SC variables, J1-J3) -> per-schema compiled
-    variables/projection (unioned back; each schema's slice keeps its own
-    output shape) -> optional exists-by-pid anti-join (J4).
+    scan each file once -> first-match schema selection (unmatched files
+    dropped) -> one snapshot join per catalog resource for SC variables
+    (J1-J3) -> every schema's compiled projection in turn on all rows
+    (row-local and total, V3), each folded to ``_ds<j>``/``_fv<j>`` ->
+    one ``CASE schema_id`` pick -> optional exists-by-pid anti-join (J4).
     """
     if isinstance(file_paths, DataFrame):
         files = file_paths
     else:
         files = spark.createDataFrame([(p,) for p in file_paths], "file string")
     wide = hdf5.scan_files_wide(files)
-    selected = with_selected_schema(
+    df = with_selected_schema(
         wide.withColumn("filename", F.col("file")), schemas, fallback_id=None
-    )
+    ).filter(F.col("schema_id").isNotNull())
     # merge caller resolvers over the defaults: the NXS default always
     # exists, and the SC resolver is injected whenever snapshots are
     # given and the caller didn't supply one — otherwise explicit
@@ -60,42 +61,39 @@ def ingest_files(
     nxs = (resolvers or {}).get("NXS") or hdf5.make_nxs_resolver()
     defaults: dict = {"NXS": nxs}
     if snapshots:
-        from scicat_ingestor_spark.plans.sc import make_sc_resolver
+        from scicat_ingestor_spark.plans.sc import attach_snapshots, make_sc_resolver
 
         defaults["SC"] = make_sc_resolver()
+        df = attach_snapshots(df, schemas, snapshots, nxs_resolver=nxs)
     resolvers = {**defaults, **(resolvers or {})}
-    outs = []
-    for schema in schemas:
+    dataset_json = failed_vars = F  # F.when starts each CASE, Column.when extends it
+    for j, schema in enumerate(schemas):
         transform = compile_schema(schema, file_path_col="file", resolvers=resolvers)
-        slice_df = selected.filter(F.col("schema_id") == schema.id)
-        if snapshots:
-            from scicat_ingestor_spark.plans.sc import attach_snapshots
-
-            slice_df = attach_snapshots(
-                slice_df, schema, snapshots, nxs_resolver=nxs
-            )
-        compiled = transform(slice_df)
-        envelope = [
-            F.col(f.machine_name)
-            for f in schema.fields
-            if f.field_type == "high_level"
-        ]
+        compiled = transform(df)
+        envelope = [F.col(f.machine_name) for f in schema.fields
+                    if f.field_type == "high_level"]
         if "scientificMetadata" in compiled.columns:
             envelope.append(F.col("scientificMetadata"))
-        out = compiled.select(
-            "file",
-            F.lit(schema.id).alias("schema_id"),
+        # keep only the folded output: the next schema's same-named
+        # field columns must not clash with this one's
+        df = compiled.select(
+            *df.columns,
             F.to_json(
                 F.struct(*envelope),
                 {"ignoreNullFields": "true"},  # P8 null-dropping projection
-            ).alias("dataset_json"),
-            F.concat_ws(",", F.col("_failures")).alias("failed_vars"),
-            F.md5(F.col("file")).alias("pid"),
+            ).alias(f"_ds{j}"),
+            F.concat_ws(",", F.col("_failures")).alias(f"_fv{j}"),
         )
-        outs.append(out)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
+        is_schema = F.col("schema_id") == schema.id
+        dataset_json = dataset_json.when(is_schema, F.col(f"_ds{j}"))
+        failed_vars = failed_vars.when(is_schema, F.col(f"_fv{j}"))
+    result = df.select(
+        "file",
+        "schema_id",
+        dataset_json.alias("dataset_json"),
+        failed_vars.alias("failed_vars"),
+        F.md5(F.col("file")).alias("pid"),
+    )
     if existing_pids is not None:
         result = anti_by_key(result, existing_pids, "pid")
     return result

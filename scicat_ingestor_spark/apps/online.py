@@ -140,7 +140,9 @@ def main(argv: list[str] | None = None) -> int:
     def transform(batch):
         batch = drop_writer_errors(batch) if "error_encountered" in batch.columns else batch
         file_col = "file_name" if "file_name" in batch.columns else "file"
-        files = batch.select(F.col(file_col).alias("file"))
+        # a file redelivered inside one micro-batch is ingested once: the
+        # sink's anti-join sees only the target, not the batch itself
+        files = batch.select(F.col(file_col).alias("file")).dropDuplicates()
         dims = refresher.snapshots() if refresher is not None else snapshots
         return ingest_files(batch.sparkSession, files, schemas, snapshots=dims)
 

@@ -108,16 +108,28 @@ def make_sc_resolver(resource_fields: dict[str, tuple[str, ...]] | None = None):
     return resolve
 
 
+def _mode_key(key: Column, ci: bool) -> Column:
+    """Join key tagged with its match mode (``ilike`` keys lowered), so
+    exact and case-insensitive lookups of one resource share one join
+    without matching each other's rows. NULL stays NULL."""
+    key = key.cast("string")
+    return F.concat(F.lit("~"), F.lower(key)) if ci else F.concat(F.lit("="), key)
+
+
 def attach_snapshots(
     df: DataFrame,
-    schema,
+    schemas,
     snapshots: dict[str, DataFrame],
     nxs_resolver=None,
     dim_keys: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Attach every dimension snapshot a schema's SC variables need,
+    """Attach every dimension snapshot the schemas' SC variables need,
     deriving (resource, join key) from each variable's url — the
     config-driven path the apps use (``scicat.dimension_snapshot_dir``).
+
+    One broadcast join per resource for all schemas: the fact-side key
+    is a ``CASE schema_id`` over each schema's key expression, so a row
+    is keyed by its own schema only (NULL, no match, if it has none).
 
     Handles the url shapes the reference's shipped schemas use:
     - path key:      ``proposals/<proposal_id>``
@@ -133,6 +145,8 @@ def attach_snapshots(
     import re
     import urllib.parse
 
+    from pyspark.sql import Window
+
     keys = {
         "proposals": "proposalId",
         "instruments": "name",
@@ -140,61 +154,62 @@ def attach_snapshots(
         "datasets": "pid",
         **(dim_keys or {}),
     }
-    by_name = {v.name: v for v in schema.variables}
-    out = df
-    attached: set[str] = set()
-    for var in schema.variables:
-        if var.source != "SC" or not var.url:
-            continue
-        url = urllib.parse.unquote(var.url)
-        resource = url.strip("/").split("/")[0].split("?")[0]
-        if resource in attached or resource not in snapshots:
-            continue
-        dim_key = keys.get(resource)
-        if dim_key is None:
-            continue
-        ci = '"ilike"' in url
-        key_expr = None
-        ref = None
-        path_m = re.fullmatch(rf"{resource}/<(\w+)>", url.strip("/"))
-        filt_m = re.search(
-            rf'"{dim_key}"\s*:\s*(?:{{\s*"ilike"\s*:\s*)?"([^"]*)"', url
-        )
-        if path_m:
-            ref = path_m.group(1)
-        elif filt_m:
-            tm = re.fullmatch(r"<(\w+)>", filt_m.group(1))
-            if tm:
-                ref = tm.group(1)
-            else:
-                key_expr = F.lit(filt_m.group(1))
-        else:
-            continue
-        if key_expr is None:
-            ref_var = by_name.get(ref)
-            if ref_var is None or ref_var.source != "NXS" or nxs_resolver is None:
+    # resource -> schema id -> (fact-side key, case-insensitive): each
+    # schema's first resolvable url for the resource
+    lookups: dict[str, dict[str, tuple[Column, bool]]] = {}
+    for schema in schemas:
+        by_name = {v.name: v for v in schema.variables}
+        for var in schema.variables:
+            if var.source != "SC" or not var.url:
                 continue
-            key_expr = nxs_resolver(ref_var).getField("value")
-        dim = snapshots[resource]
-        join_col = dim_key
-        if ci:
-            join_col = f"{dim_key}__ci"
-            dim = dim.withColumn(join_col, F.lower(F.col(dim_key)))
-            key_expr = F.lower(key_expr)
+            url = urllib.parse.unquote(var.url)
+            resource = url.strip("/").split("/")[0].split("?")[0]
+            dim_key = keys.get(resource)
+            if resource not in snapshots or dim_key is None:
+                continue
+            key_expr = None
+            path_m = re.fullmatch(rf"{resource}/<(\w+)>", url.strip("/"))
+            filt_m = re.search(
+                rf'"{dim_key}"\s*:\s*(?:{{\s*"ilike"\s*:\s*)?"([^"]*)"', url
+            )
+            if path_m:
+                ref = path_m.group(1)
+            elif filt_m:
+                tm = re.fullmatch(r"<(\w+)>", filt_m.group(1))
+                if tm:
+                    ref = tm.group(1)
+                else:
+                    key_expr = F.lit(filt_m.group(1))
+            else:
+                continue
+            if key_expr is None:
+                ref_var = by_name.get(ref)
+                if ref_var is None or ref_var.source != "NXS" or nxs_resolver is None:
+                    continue
+                key_expr = nxs_resolver(ref_var).getField("value")
+            ci = '"ilike"' in url
+            lookups.setdefault(resource, {}).setdefault(schema.id, (key_expr, ci))
+    out = df
+    for resource, keyed in lookups.items():
+        dim_key = keys[resource]
+        modes = sorted({ci for _, ci in keyed.values()})
+        dim = snapshots[resource].withColumn(
+            "_key", F.explode(F.array(*[_mode_key(F.col(dim_key), ci) for ci in modes]))
+        )
         # duplicate join keys (e.g. names merged by the ilike lowering)
         # must not fan out fact rows: the reference takes the FIRST
         # match (filtered GET + getitem 0, J2) — keep-first on the dim,
         # deterministic via the original key order
-        from pyspark.sql import Window
-
-        wd = Window.partitionBy(join_col).orderBy(dim_key)
+        wd = Window.partitionBy("_key").orderBy(dim_key)
         dim = (
             dim.withColumn("_rn", F.row_number().over(wd))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        out = attach_dimension(out, dim, resource, key_expr, join_col)
-        attached.add(resource)
+        fact_key = F  # F.when starts the CASE, Column.when extends it
+        for sid, (key_expr, ci) in keyed.items():
+            fact_key = fact_key.when(F.col("schema_id") == sid, _mode_key(key_expr, ci))
+        out = attach_dimension(out, dim, resource, fact_key, "_key")
     return out
 
 

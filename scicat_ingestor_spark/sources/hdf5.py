@@ -1,15 +1,18 @@
-"""HDF5/NeXus source (SURVEY §2.1 S6-S7): hierarchical file -> long table.
+"""HDF5/NeXus source (SURVEY §2.1 S6-S7): hierarchical file -> per-file map.
 
 The reference opens each NeXus file and reads datasets at schema-given
 paths, with `units` attrs and wildcard path segments
 (/root/reference/src/scicat_nexus_helper.py:62-95,
 /root/reference/src/scicat_dataset.py:285-324, recursion :430-458).
 
-Spark-first: flatten each file ONCE into the long relation
-    (file STRING, h5_path STRING, value STRING, unit STRING)
+Spark-first: ONE reader loop, ``scan_files_wide``, flattens each file
+once into
+    (file STRING, nxs MAP<h5_path, STRUCT<value, unit>>)
 via ``mapInPandas`` over a DataFrame of file paths (the scan runs next to
-the data; no driver I/O). Wildcard path expansion then becomes ``rlike``
-+ ``collect_list`` on the long table — pure relational ops.
+the data; no driver I/O). The NXS resolver reads variables straight from
+the map, wildcard paths included. ``scan_files`` explodes the map into
+the long relation ``(file, h5_path, value, unit)``, where wildcard path
+expansion is ``rlike`` + ``collect_list`` — pure relational ops.
 
 Reader fallback chain (per file): h5py when installed -> the pure-python
 ``hdf5lite`` reader for files that exist on disk (covers real NeXus files
@@ -34,7 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-LONG_SCHEMA = "file string, h5_path string, value string, unit string"
+LONG_SCHEMA = "file string, h5_path string not null, value string, unit string"
 
 
 def try_import_h5py():
@@ -237,42 +240,18 @@ def fake_tree(path: str) -> list[tuple[str, str, str]]:
     ]
 
 
-def scan_files(files_df: DataFrame, path_col: str = "file") -> DataFrame:
-    """The S6 scan: DataFrame[file] -> long table, via mapInPandas.
-
-    One task per partition of file paths; each file is opened exactly
-    once regardless of how many variables read from it (the reference
-    re-reads per variable; scanning once is the columnar win).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"file": [], "h5_path": [], "value": [], "unit": []}
-            for path in pdf[path_col]:
-                rows = read_rows(path)
-                for h5_path, value, unit in rows:
-                    out["file"].append(path)
-                    out["h5_path"].append(h5_path)
-                    out["value"].append(value)
-                    out["unit"].append(unit)
-            yield pd.DataFrame(out)
-
-    return files_df.mapInPandas(run, schema=LONG_SCHEMA)
-
-
 WIDE_SCHEMA = "file string, nxs map<string, struct<value: string, unit: string>>"
 
 
 def scan_files_wide(files_df: DataFrame, path_col: str = "file") -> DataFrame:
-    """S6 scan straight to the per-file view: DataFrame[file] ->
-    (file, nxs MAP<h5_path, STRUCT<value,unit>>).
+    """The S6 scan: DataFrame[file] -> (file, nxs MAP<h5_path,
+    STRUCT<value,unit>>), via mapInPandas — the ingest hot path.
 
-    Every row of one file is produced by the same reader call, so the
-    pivot that ``wide_table`` does with a groupBy shuffle can be emitted
-    directly inside the scan — zero shuffles, and the long table (10-100
-    rows per file) never materializes. This is the ingest hot path; the
-    long table from ``scan_files`` remains the relational view for
-    wildcard lookups and ad-hoc queries.
+    One task per partition of file paths; each file is opened exactly
+    once regardless of how many variables read from it (the reference
+    re-reads per variable; scanning once is the columnar win). Every row
+    of one file comes from the same reader call, so the per-file map is
+    built inside the scan: no shuffle, no long table.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -285,6 +264,17 @@ def scan_files_wide(files_df: DataFrame, path_col: str = "file") -> DataFrame:
             yield pd.DataFrame({"file": files, "nxs": maps})
 
     return files_df.mapInPandas(run, schema=WIDE_SCHEMA)
+
+
+def scan_files(files_df: DataFrame, path_col: str = "file") -> DataFrame:
+    """The long relation ``(file, h5_path, value, unit)``: the wide scan's
+    map exploded — the relational view for wildcard lookups and ad-hoc
+    queries. A file with no datasets has no rows."""
+    return (
+        scan_files_wide(files_df, path_col)
+        .select("file", F.explode("nxs").alias("h5_path", "vu"))
+        .select("file", "h5_path", "vu.value", "vu.unit")
+    )
 
 
 def compile_wildcard(path_pattern: str) -> str:
@@ -311,20 +301,8 @@ def _is_literal(segment: str) -> bool:
     return not any(c in segment for c in ".^$*+?[](){}|\\")
 
 
-def wide_table(long_df: DataFrame) -> DataFrame:
-    """Pivot the long table to one row per file with a
-    MAP<h5_path, STRUCT<value,unit>> column ``nxs`` — the per-file view the
-    NXS variable resolver reads. One shuffle on `file`; the map is bounded
-    by datasets-per-file, not table size, so rows stay small at 100 TB.
-    """
-    entry = F.struct(F.col("h5_path"), F.struct("value", "unit").alias("vu"))
-    return long_df.groupBy("file").agg(
-        F.map_from_entries(F.array_sort(F.collect_list(entry))).alias("nxs")
-    )
-
-
 def make_nxs_resolver(map_col: str = "nxs"):
-    """SourceResolver for NXS variables over the ``wide_table`` map column.
+    """SourceResolver for NXS variables over the ``scan_files_wide`` map column.
 
     Reference semantics (/root/reference/src/scicat_dataset.py:295-324):
     - value_type 'string[]' + '*' in path -> wildcard selector: all

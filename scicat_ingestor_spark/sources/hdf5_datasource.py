@@ -10,7 +10,7 @@ Options:
 - ``paths``: comma-separated file paths (or one path).
 The emitted relation is the engine's long table
 ``(file, h5_path, value, unit)`` — identical to ``hdf5.scan_files``, so
-wildcard lookup / wide_table / the NXS resolver compose unchanged.
+wildcard lookup and the other long-table operators compose unchanged.
 
 h5py-gated like the mapInPandas scanner: without h5py the deterministic
 fake tree serves the rows (same plumbing, schema, partitioning).

@@ -18,7 +18,8 @@ on day one of a real deployment. This module closes that gap:
   ``refresh_every_n_batches`` micro-batches (or on an age threshold) it
   re-fetches each registered resource on the DRIVER, rebuilds the small
   dimension DataFrame, and hands back the snapshot dict that
-  ``plans.sc.attach_snapshots`` consumes. Between refreshes it returns
+  ``plans.sc.attach_snapshots`` joins, one broadcast join per resource
+  for all schemas. Between refreshes it returns
   the cached dict — zero cost on the hot path.
 
 Scale stance (the ADR the round-4 verdict asked for): catalog

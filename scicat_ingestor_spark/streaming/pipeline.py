@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -61,13 +62,18 @@ def idempotent_append(
 ) -> None:
     """At-least-once-safe sink: anti-join on `key` against the current
     target, then append. Mirrors the reference's dedup-before-POST
-    (/root/reference/src/scicat_offline_ingestor.py:270-279)."""
+    (/root/reference/src/scicat_offline_ingestor.py:270-279). A missing
+    target, or one with no data file yet (an aborted first write), is
+    empty; an unreadable one raises, so the batch retries."""
     spark = batch.sparkSession
+    fresh = batch
     try:
         existing = spark.read.parquet(target_path).select(key).distinct()
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+    else:
         fresh = batch.join(existing, key, "left_anti")
-    except Exception:  # target does not exist yet
-        fresh = batch
     fresh.write.mode("append").parquet(target_path)
 
 

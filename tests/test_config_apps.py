@@ -117,6 +117,29 @@ def test_online_app_replay_idempotent(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out")).count() == first
 
 
+def test_online_app_redelivery_within_one_batch_appends_once(spark, tmp_path):
+    """A file named twice inside ONE micro-batch (a redelivery landing in
+    the same trigger) is appended once: the anti-join against the target
+    alone cannot see the batch's own duplicates."""
+    from scicat_ingestor_spark.apps.online import main
+
+    src = str(tmp_path / "replay")
+    spark.createDataFrame(
+        [("job-0", "/data/run_0.nxs", False), ("job-1", "/data/run_1.nxs", False),
+         ("job-0-again", "/data/run_0.nxs", False)],
+        "job_id string, file_name string, error_encountered boolean",
+    ).coalesce(1).write.parquet(src)
+    out = str(tmp_path / "out")
+    argv = [
+        "--schemas-dir", _schema_dir(tmp_path), "--out", out,
+        "--checkpoint", str(tmp_path / "ck"), "--source-dir", src, "--once",
+        "--set", "ingestion.max_files_per_trigger=0",
+    ]
+    assert main(argv) == 0
+    pids = [r["pid"] for r in spark.read.parquet(out).select("pid").collect()]
+    assert len(pids) == len(set(pids)) == 2
+
+
 def test_samples_app_upserts_once_per_key(spark, tmp_path):
     from scicat_ingestor_spark.apps.samples import main
 
@@ -240,6 +263,98 @@ def test_offline_app_with_dimension_snapshots(spark, tmp_path):
         inst = payload["instrumentId"]
         inst_value = inst["value"] if isinstance(inst, dict) else inst
         assert inst_value.startswith("id-")  # case-insensitive J2 hit
+
+
+def test_ingest_files_three_schemas_match_each_schema_alone(
+    spark, multi_schema_ingest
+):
+    """One ingest plan over three schemas gives every file exactly what
+    its own schema's compile_schema gives alone (snapshots joined per
+    schema, same envelope), and drops files no schema selects. The
+    exact and the ilike instruments lookups share one join without
+    matching each other's rows."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from scicat_ingestor_spark.apps.offline import ingest_files
+    from scicat_ingestor_spark.plans.compiler import compile_schema
+    from scicat_ingestor_spark.plans.sc import attach_dimension, make_sc_resolver
+    from scicat_ingestor_spark.sources import hdf5
+
+    schemas, snaps = multi_schema_ingest
+    a, b, c = schemas
+    routed = {s.id: [f"/{s.id}/run_{i}.nxs" for i in range(3)] for s in schemas}
+    files = [f for fs in routed.values() for f in fs]
+    got = {
+        r["file"]: r
+        for r in ingest_files(spark, files, schemas, snapshots=snaps).collect()
+    }
+    assert len(got) == len(files)
+
+    nxs = hdf5.make_nxs_resolver()
+    var = {s.id: {v.name: v for v in s.variables} for s in schemas}
+    # keep-first on the lowered name keeps INSTR-2 (upper case sorts first)
+    instruments = snaps["instruments"].filter(F.col("name") != "instr-2")
+    instruments = instruments.withColumn("name_ci", F.lower("name"))
+    joins = {
+        "a": lambda df: attach_dimension(
+            df, snaps["proposals"], "proposals",
+            nxs(var["a"]["proposal_id"]).getField("value"), "proposalId",
+        ),
+        "b": lambda df: attach_dimension(
+            attach_dimension(
+                df, snaps["proposals"], "proposals",
+                nxs(var["b"]["sample"]).getField("value"), "proposalId",
+            ),
+            instruments, "instruments",
+            F.lower(nxs(var["b"]["instrument_name"]).getField("value")), "name_ci",
+        ),
+        "c": lambda df: attach_dimension(
+            df, snaps["instruments"], "instruments", F.lit("instr-2"), "name"
+        ),
+    }
+    for schema in schemas:
+        scanned = hdf5.scan_files_wide(
+            spark.createDataFrame([(f,) for f in routed[schema.id]], "file string")
+        )
+        compiled = compile_schema(
+            schema,
+            file_path_col="file",
+            resolvers={"NXS": nxs, "SC": make_sc_resolver()},
+        )(joins[schema.id](scanned))
+        envelope = [F.col(f.machine_name) for f in schema.fields
+                    if f.field_type == "high_level"]
+        if "scientificMetadata" in compiled.columns:
+            envelope.append(F.col("scientificMetadata"))
+        alone = compiled.select(
+            "file",
+            F.to_json(F.struct(*envelope), {"ignoreNullFields": "true"}).alias("ds"),
+            F.concat_ws(",", F.col("_failures")).alias("fv"),
+        ).collect()
+        assert len(alone) == len(routed[schema.id])
+        for r in alone:
+            row = got[r["file"]]
+            assert row["schema_id"] == schema.id
+            assert (row["dataset_json"], row["failed_vars"]) == (r["ds"], r["fv"])
+
+    def owner(f):
+        return json.loads(got[f]["dataset_json"])["owner"]["value"]
+
+    assert all(owner(f).startswith("pi-prop-") for f in routed["a"])
+    assert all(owner(f).startswith("pi-sample-") for f in routed["b"])
+    assert all(owner(f) == "nobody" for f in routed["c"])
+    assert all(got[f]["failed_vars"] == "absent" for f in routed["a"])
+    def instrument(f):
+        return json.loads(got[f]["dataset_json"])["instrumentId"]["value"]
+
+    assert all(instrument(f) in {f"id-{i}" for i in range(5)} for f in routed["b"])
+    assert all(instrument(f) == "id-lower-2" for f in routed["c"])
+    # without the catch-all, /c/ files match no schema and are dropped
+    routed_only = ingest_files(spark, files, [a, b], snapshots=snaps)
+    assert sorted(r["file"] for r in routed_only.collect()) == sorted(
+        routed["a"] + routed["b"]
+    )
 
 
 def test_example_engine_yaml_in_sync_with_config():

@@ -807,6 +807,29 @@ def test_ivf_hot_cell_split_no_hot_path_is_unsplit_plan(spark, sf_dir):
         assert "_ci#" not in armed._jdf.queryExecution().optimizedPlan().toString()
 
 
+def test_ingest_files_one_scan_no_union(spark, multi_schema_ingest):
+    """ingest_files runs every schema over ONE scan: exactly one
+    MapInPandas (a per-schema filter + union re-ran the Python scan
+    under every branch), no Union, and one broadcast join per catalog
+    resource however many schemas look it up (proposals is keyed by two
+    schemas, instruments by one exactly and one case-insensitively)."""
+    import re
+
+    from scicat_ingestor_spark.apps.offline import ingest_files
+
+    schemas, snaps = multi_schema_ingest
+    plan = _plan(
+        ingest_files(spark, ["/a/1.nxs", "/b/1.nxs", "/c/1.nxs"], schemas, snapshots=snaps)
+    )
+
+    def nodes(name):
+        return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
+
+    assert nodes("MapInPandas") == 1
+    assert "Union" not in plan
+    assert nodes("BroadcastHashJoin") == len(snaps) == 2
+
+
 def test_shared_fanout_seal_reuses_exchange(spark, sf_dir):
     """Optimizer pin (r12, ADVICE r11 #1): shared_fanout's sealed
     exchange relies on Catalyst neither folding the never-taken pin

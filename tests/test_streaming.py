@@ -70,6 +70,27 @@ def test_available_now_replay_is_idempotent(spark, sf_dir, tmp_path):
     assert spark.read.parquet(target).count() == first
 
 
+def test_idempotent_append_raises_on_unreadable_target(spark, tmp_path):
+    """A target that exists but cannot be read is not "absent": the
+    append must fail (the batch is retried) instead of re-appending the
+    whole batch next to the corrupt file. A target directory holding no
+    data file yet still counts as empty."""
+    import pytest
+
+    batch = spark.createDataFrame([("k1", 1), ("k2", 2)], "pid string, v int")
+    target = tmp_path / "out"
+    target.mkdir()
+    (target / "part-00000-corrupt.snappy.parquet").write_bytes(b"not parquet" * 8)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        idempotent_append(batch, str(target), "pid")
+    assert sorted(os.listdir(target)) == ["part-00000-corrupt.snappy.parquet"]
+
+    empty = tmp_path / "empty"
+    (empty / "_temporary").mkdir(parents=True)
+    idempotent_append(batch, str(empty), "pid")
+    assert spark.read.parquet(str(empty)).count() == 2
+
+
 def test_new_data_still_flows_after_dedup(spark, sf_dir, tmp_path):
     src, schema = _mk_source(spark, sf_dir, tmp_path, n=100)
     target = str(tmp_path / "out")
